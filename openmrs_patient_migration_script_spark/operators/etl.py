@@ -11,14 +11,18 @@ reference semantics.
 
 Scale notes (100 TB):
 - every transform here is a narrow projection over the scan (no shuffle)
-  except surrogate-key assignment, which uses a range-partition +
-  per-partition-offset scheme instead of a single-partition global window;
+  except surrogate-key assignment, whose window is partitioned by
+  key-range bins with per-bin offsets instead of being one global
+  single-partition window;
 - dimension joins (nation/region) are explicit broadcasts;
 - UUIDs are deterministic (functions/ids.py) so re-runs are idempotent and
   speculative task retries are safe.
 """
 
 from __future__ import annotations
+
+import math
+import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -118,6 +122,12 @@ def max_id_offset(existing: DataFrame, id_col: str) -> int:
     return int(row["m"]) if row["m"] is not None else 0
 
 
+def _byte_position(b: bytes) -> int:
+    """Driver-side twin of the string path's per-row position: the first
+    7 bytes (zero-padded) as a big-endian unsigned integer."""
+    return int.from_bytes(b[:7].ljust(7, b"\0"), "big")
+
+
 def assign_surrogate_keys(
     df: DataFrame,
     natural_key: str,
@@ -126,130 +136,87 @@ def assign_surrogate_keys(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """E2: dense surrogate keys = ``offset + row_number() OVER (ORDER BY key)``
-    — without the single-partition global window that kills parallelism at
-    100 TB (SURVEY.md §4).
+    (Spark's ascending order: NULL keys first) — without the
+    single-partition global window that kills parallelism at 100 TB
+    (SURVEY.md §4).
 
-    Strategy (r3 — no materialization): derive ~``num_partitions`` range
-    cut points of the natural key driver-side ONCE (numeric keys: a fine
-    histogram that yields cuts and exact offsets in one pass; other keys:
-    a seeded sample + counts pass) and bake them into the plan as
-    literals. The range-bucket id is then a PURE expression of the key, so
-    a task recomputation always lands every row in the same bucket no
-    matter how the cuts were obtained: cumulative per-bucket counts are
-    global-rank offsets, and a bucket-local ``row_number`` completes the
-    byte-identical global rank.
+    Two light jobs, no materialization. Job 1 reads the key's min/max.
+    Job 2 counts rows per fine bin: ``64 * num_partitions`` equal-width
+    bins over a number that never decreases as the key grows (numeric
+    keys: the key itself; binary-collated strings and binary keys: the 7
+    bytes after the min/max common prefix — every key in range shares
+    that prefix). NULL keys go to bin 0. The bin is a PURE expression of
+    the key over driver-side literals, so a recomputed task lands every
+    row in the same bin. Bins are key ranges in bin order, so the count
+    of rows in earlier bins is each bin's exact global-rank offset, and a
+    window partitioned by the bin finishes the rank with a bin-local
+    ``row_number``. Bin balance only affects speed, never the ids. A
+    constant key, a range reaching NaN or an infinity, and keys of other
+    types (dates, other collations) get one bin and a single-task window.
 
-    r2 got the same recomputation-safety from ``repartitionByRange`` +
-    eager ``localCheckpoint`` — the boundaries there live inside a sampled
-    shuffle, so only materialization pins them. That cost a full range
-    shuffle, a checkpoint write, AND a second hash-partition exchange for
-    the window (Catalyst can't see that spark_partition_id matches the
-    window key). This path pays two light scans (cuts + counts) and ONE
-    shuffle, and survives executor loss like any pure plan. Cut quality
-    only affects balance, never correctness; heavily-skewed keys just make
-    uneven buckets (same failure mode range partitioning has).
+    The fine bin keys the window, not a coarse cut of ``num_partitions``
+    buckets: the window's exchange hash-partitions its key, and
+    ``num_partitions`` bucket ids hashed over as many shuffle partitions
+    collide. On the migration benchmark's 320k new clients at 4 shuffle
+    partitions, 4 buckets left the keyed frame at [81010, 238990] rows in
+    2 of 4 partitions; the 256 bins give [63907, 74623, 89694, 91776],
+    the largest 1.15x the mean (pinned at 40k rows in
+    tests/test_etl_invariants.py). String keys spread less evenly where
+    their bytes use few values (hex digests: largest 1.65x the mean).
+
+    The per-bin offsets travel as ONE array literal indexed by bin,
+    folded from a single string literal, where a map of ``(bin, offset)``
+    pairs would be 128,000 literal nodes at ``num_partitions=1000``. At
+    that size the literal holds 64,000 longs (512 KB; the optimized plan
+    prints ~480 KB at 2M rows) and Catalyst optimizes and plans it in
+    ~0.2 s on 4 cores.
     """
-    from pyspark.sql.types import NumericType
+    from pyspark.sql.types import BinaryType, NumericType, StringType
 
-    spark = df.sparkSession
     if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism
+    key = F.col(natural_key)
     key_type = df.schema[natural_key].dataType
-    if isinstance(key_type, NumericType):
-        # Numeric fast path — TWO light jobs total. Job 1: min/max. Job 2:
-        # a fine histogram (64 bins per target partition) whose bin id is a
-        # PURE expression over the min/max literals; driver-side, the
-        # histogram yields balanced coarse cuts AND exact rank offsets in
-        # the same pass (coarse buckets are unions of whole fine bins, so
-        # offsets are exact sums of fine counts — bin-edge FP quirks are
-        # harmless because the output plan evaluates the IDENTICAL
-        # expression). An approxQuantile pass + a separate counts pass
-        # measured ~2x this build cost.
-        kmin, kmax = df.agg(
-            F.min(natural_key), F.max(natural_key)
-        ).collect()[0]
-        if kmin is None or float(kmax) == float(kmin):
-            fine_expr = F.lit(0)
-        else:
-            lo, span = float(kmin), float(kmax) - float(kmin)
-            nbins = num_partitions * 64
-            # divide by span BEFORE scaling: the normalized position is in
-            # [0, 1], so the expression cannot overflow even for keys near
-            # the double range (value * nbins first could hit inf)
-            fine_expr = F.least(
-                F.lit(nbins - 1),
-                F.floor(
-                    (F.col(natural_key).cast("double") - F.lit(lo))
-                    / F.lit(span * (1.0 + 1e-9))
-                    * F.lit(float(nbins))
-                ).cast("int"),
-            )
-        hist = sorted(
-            (r["_fb"], r["cnt"])
-            for r in df.groupBy(fine_expr.alias("_fb"))
-            .agg(F.count("*").alias("cnt"))
-            .collect()
+    kmin, kmax = df.agg(F.min(key), F.max(key)).collect()[0]
+    byte_ordered = isinstance(key_type, BinaryType) or (
+        isinstance(key_type, StringType) and key_type.collation == "UTF8_BINARY"
+    )
+    pos = None
+    if kmin is not None and isinstance(key_type, NumericType):
+        pos, lo, hi = key.cast("double"), float(kmin), float(kmax)
+    elif kmin is not None and byte_ordered:
+        # Spark orders both as unsigned bytes, as Python orders bytes
+        lo_b, hi_b = (v.encode() if isinstance(v, str) else bytes(v) for v in (kmin, kmax))
+        k = len(os.path.commonprefix([lo_b, hi_b]))
+        raw = key if isinstance(key_type, BinaryType) else key.cast("binary")
+        pos = F.conv(F.rpad(F.hex(F.substring(raw, k + 1, 7)), 14, "0"), 16, 10).cast("double")
+        lo, hi = float(_byte_position(lo_b[k:])), float(_byte_position(hi_b[k:]))
+    nbins = 1
+    if pos is not None and math.isfinite(hi - lo) and hi > lo:
+        nbins = num_partitions * 64
+        # divide by the span BEFORE scaling: the normalized position is in
+        # [0, 1], so the expression cannot overflow even for keys near the
+        # double range; the clamps absorb last-ulp driver/executor rounding
+        fine = F.floor((pos - F.lit(lo)) / F.lit((hi - lo) * (1.0 + 1e-9)) * F.lit(float(nbins)))
+        bin_expr = F.when(key.isNull(), F.lit(0)).otherwise(
+            F.least(F.lit(nbins - 1), F.greatest(F.lit(0), fine)).cast("int")
         )
-        total = sum(c for _, c in hist)
-        target = max(1, -(-total // num_partitions))  # ceil
-        cuts, offsets, cum, acc, pid_idx = [], {0: 0}, 0, 0, 0
-        for fb, cnt in hist:
-            if acc >= target and pid_idx < num_partitions - 1:
-                cuts.append(prev_fb)
-                pid_idx += 1
-                offsets[pid_idx] = cum
-                acc = 0
-            acc += cnt
-            cum += cnt
-            prev_fb = fb
-        if cuts:
-            pid = sum(
-                (fine_expr > F.lit(c)).cast("int") for c in cuts
-            ).alias("_pid")
-        else:
-            pid = F.lit(0).alias("_pid")
-        bucketed = df.withColumn("_pid", pid)
     else:
-        # generic path (string keys): seeded-sample cut values, then an
-        # exact counts pass over the literal-cut buckets
-        n = df.count()
-        frac = min(1.0, (num_partitions * 1000) / n) if n else 1.0
-        sample = sorted(
-            r[0]
-            for r in df.select(natural_key).sample(frac, seed=42).collect()
-            if r[0] is not None
-        )
-        step = max(1, len(sample) // num_partitions)
-        cuts = sorted(set(sample[step::step]))
-        if cuts:
-            pid = sum(
-                (F.col(natural_key) > F.lit(c)).cast("int") for c in cuts
-            ).alias("_pid")
-        else:
-            pid = F.lit(0).alias("_pid")
-        bucketed = df.withColumn("_pid", pid)
-        counts = {
-            r["_pid"]: r["cnt"]
-            for r in bucketed.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-        }
-        # buckets are key ranges in _pid order, so cumulative counts in
-        # pid order are exactly the global rank offsets.
-        cum, offsets = 0, {}
-        for p in sorted(counts):
-            offsets[p] = cum
-            cum += counts[p]
-        if not offsets:
-            offsets = {0: 0}
-    offset_expr = F.element_at(
-        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-        F.col("_pid"),
+        bin_expr = F.lit(0)
+    binned = df.withColumn("_bin", bin_expr)
+    counts = dict(binned.groupBy("_bin").count().collect())
+    offsets, cum = [], 0
+    for b in range(nbins):
+        offsets.append(cum)
+        cum += counts.get(b, 0)
+    offset_of_bin = F.element_at(
+        F.split(F.lit(",".join(map(str, offsets))), ",").cast("array<bigint>"),
+        F.col("_bin") + 1,
     )
-    w = Window.partitionBy("_pid").orderBy(natural_key)
-    return (
-        bucketed.withColumn("_local_rn", F.row_number().over(w))
-        .withColumn(id_col, (F.lit(offset) + offset_expr + F.col("_local_rn")).cast("long"))
-        .drop("_pid", "_local_rn")
-    )
+    w = Window.partitionBy("_bin").orderBy(natural_key)
+    return binned.withColumn(
+        id_col, (F.lit(offset) + offset_of_bin + F.row_number().over(w)).cast("long")
+    ).drop("_bin")
 
 
 def unpivot_attributes(
@@ -337,16 +304,35 @@ def write_multi_sink(
     reg: DataFrame, base_path: str, fmt: str = "parquet"
 ) -> dict[str, str]:
     """S5 sink half: materialize the registration build once
-    (localCheckpoint — same exactly-once rationale as
-    assign_surrogate_keys), then write each fan-out frame under
-    ``base_path/<table>``. Against MySQL the same frames feed
-    sources/jdbc.py::write_jdbc_append instead. Returns table → path."""
+    (localCheckpoint, so the seven feeds read one stored copy and never
+    re-run the upstream plan), then write each fan-out frame under
+    ``base_path/<table>``. The seven writes are submitted at once, one
+    ``InheritableThread`` each (so the caller's job group and
+    description reach every write's jobs): each feed is one short job
+    over the checkpoint's partitions, and one after another they left
+    the cores idle between jobs. Against MySQL the same frames feed
+    sources/jdbc.py::write_jdbc_append instead. Returns table → path;
+    the first failed write's exception is re-raised after all finish."""
+    from pyspark import InheritableThread
+
     reg = reg.localCheckpoint(eager=True)
-    paths = {}
-    for name, frame in fan_out_registration(reg).items():
-        path = f"{base_path}/{name}"
-        frame.write.format(fmt).mode("overwrite").save(path)
-        paths[name] = path
+    frames = fan_out_registration(reg)
+    paths = {name: f"{base_path}/{name}" for name in frames}
+    errors: list[Exception] = []
+
+    def write(name: str) -> None:
+        try:
+            frames[name].write.format(fmt).mode("overwrite").save(paths[name])
+        except Exception as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+
+    threads = [InheritableThread(target=write, args=(name,)) for name in frames]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
     return paths
 
 

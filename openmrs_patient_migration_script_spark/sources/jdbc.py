@@ -21,7 +21,11 @@ decisions are in the options they emit:
   collapse row-at-a-time INSERTs into multi-row packets; idempotent
   re-runs anti-join against destination keys BEFORE writing
   (operators/etl.py::idempotent_new_rows), the reference's "skip
-  already-migrated clients" rule re-expressed as a plan.
+  already-migrated clients" rule re-expressed as a plan. Connections:
+  embedded Derby serialises inserters, so Derby appends write through
+  ONE connection (``numPartitions=1``); other dialects open one per
+  upstream partition. The 100 TB bound on MySQL connections (its
+  ``max_connections`` against thousands of partitions) is still open.
 """
 
 from __future__ import annotations
@@ -101,15 +105,28 @@ def jdbc_append_options(
     isolation: str = "READ_COMMITTED",
     driver: str | None = None,
 ) -> dict[str, str]:
-    """S3: option map for an append sink. MySQL URLs gain
-    ``rewriteBatchedStatements=true`` (see :func:`mysql_tuned_url`) so
-    ``batchsize`` actually collapses into multi-row INSERT packets."""
+    """S3: option map for an append sink, tuned per dialect:
+
+    - MySQL URLs gain ``rewriteBatchedStatements=true`` (see
+      :func:`mysql_tuned_url`) so ``batchsize`` actually collapses into
+      multi-row INSERT packets.
+    - Derby URLs get ``numPartitions=1``: embedded Derby serialises
+      concurrent inserters, so one connection is the fastest append
+      (a materialised 320k-row mapping frame, 4 cores, warm: 0.65–0.67 s
+      through one connection, 1.11–1.40 s through four) and it
+      allocates fewer pages. Without
+      the option the connection count would follow the upstream
+      partitioning, which varies from run to run.
+
+    Other dialects open one connection per upstream partition."""
     opts = {
         "url": mysql_tuned_url(url, for_write=True),
         "dbtable": table,
         "batchsize": str(batch_size),
         "isolationLevel": isolation,
     }
+    if url.startswith("jdbc:derby:"):
+        opts["numPartitions"] = "1"
     if driver is not None:
         opts["driver"] = driver
     return opts
@@ -133,7 +150,14 @@ def read_jdbc_dim(
 
 
 def write_jdbc_append(df: DataFrame, **append_kwargs) -> None:
-    """S3: append rows into a destination table."""
-    df.write.format("jdbc").options(**jdbc_append_options(**append_kwargs)).mode(
-        "append"
-    ).save()
+    """S3: append rows into a destination table. A ``numPartitions``
+    bound is applied here as a narrow ``coalesce`` instead of being
+    handed to Spark's writer: the writer compares it with
+    ``df.rdd.getNumPartitions``, which under AQE runs the upstream's
+    shuffle stages once more before the write runs them again (the
+    migration's mapping append: 13 jobs instead of 7)."""
+    opts = jdbc_append_options(**append_kwargs)
+    n = opts.pop("numPartitions", None)
+    if n is not None:
+        df = df.coalesce(int(n))
+    df.write.format("jdbc").options(**opts).mode("append").save()

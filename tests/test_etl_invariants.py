@@ -25,6 +25,50 @@ def test_surrogate_keys_dense_and_ordered(spark, sf_dir):
     assert keys == sorted(keys)
 
 
+def test_surrogate_keys_null_keys_sort_first(spark):
+    """The ``ORDER BY key`` contract on both paths: NULL keys take the
+    first ids (Spark's ascending order is NULLS FIRST)."""
+    nums = spark.createDataFrame([(5,), (None,), (3,), (9,)], "k long")
+    got = {r["k"]: r["sid"] for r in assign_surrogate_keys(nums, "k", id_col="sid").collect()}
+    assert got == {None: 1, 3: 2, 5: 3, 9: 4}
+
+    # multi-byte UTF-8 and a shared prefix: byte order is code-point order
+    words = ["pré", None, "pra", "prz", "pr", "prée", "pr中"]
+    strs = spark.createDataFrame([(w,) for w in words], "k string")
+    got = {r["k"]: r["sid"] for r in assign_surrogate_keys(strs, "k", id_col="sid").collect()}
+    want = [None] + sorted(w for w in words if w is not None)
+    assert got == {w: i for i, w in enumerate(want, start=1)}
+
+
+def test_surrogate_keys_window_spreads_over_every_shuffle_partition(spark):
+    """The window is keyed by the fine bin, not by ``num_partitions``
+    coarse buckets whose few hash values collide: at 4 shuffle
+    partitions every partition holds rows and the largest is at most
+    1.5x the mean. AQE coalescing is off so the window's own partitions
+    are measured, not their small-data merge."""
+    conf = {
+        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    before = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        df = spark.range(40_000).select((F.col("id") * 7 + 3).alias("k"))
+        out = assign_surrogate_keys(df, "k", id_col="sid", offset=10, num_partitions=4)
+        sizes = [
+            r["n"]
+            for r in out.groupBy(F.spark_partition_id().alias("p"))
+            .agg(F.count("sid").alias("n"))
+            .collect()
+        ]
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert len(sizes) == 4, sizes
+    assert max(sizes) <= 1.5 * (sum(sizes) / 4), sizes
+
+
 def test_registration_fanout_conservation(spark, sf_dir):
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")

@@ -211,20 +211,20 @@ def test_salted_topk_equals_plain_topk(spark, kv, k):
 @settings(**SETTINGS)
 @given(
     st.lists(st.integers(min_value=0, max_value=10**6), min_size=1, max_size=50, unique=True),
+    st.integers(min_value=0, max_value=3),
     st.integers(min_value=0, max_value=1000),
 )
-def test_surrogate_keys_dense_and_ordered(spark, keys, offset):
+def test_surrogate_keys_dense_and_ordered(spark, keys, n_null, offset):
     """Gapless ids starting at offset+1, assigned in natural-key order —
-    the global-window contract, from the parallel range-partition plan."""
+    the global-window contract, from the parallel bin-partitioned plan.
+    NULL keys sort first, as ``ORDER BY key`` does."""
     from openmrs_patient_migration_script_spark.operators.etl import (
         assign_surrogate_keys,
     )
 
-    df = spark.createDataFrame([(kk,) for kk in keys], ["k"])
+    df = spark.createDataFrame([(kk,) for kk in keys + [None] * n_null], "k long")
     out = assign_surrogate_keys(df, "k", id_col="sid", offset=offset, num_partitions=4)
-    got = {r["k"]: r["sid"] for r in out.collect()}
-    for rank, kk in enumerate(sorted(keys), start=1):
-        assert got[kk] == offset + rank
+    _assert_nulls_first_then_key_order(out.collect(), keys, n_null, offset)
 
 
 @settings(**SETTINGS)
@@ -475,19 +475,26 @@ def test_listagg_bounded_fails_loud_on_oversized_group(spark):
         max_size=40,
         unique=True,
     ),
+    st.integers(min_value=0, max_value=3),
     st.integers(min_value=0, max_value=100),
 )
-def test_surrogate_keys_string_path_dense_and_ordered(spark, keys, offset):
-    """The non-numeric branch (seeded-sample cuts + exact counts pass)
-    honors the same global-window contract as the numeric fast path."""
+def test_surrogate_keys_string_path_dense_and_ordered(spark, keys, n_null, offset):
+    """The non-numeric branch (byte-position bins) honors the same
+    global-window contract as the numeric path, NULL keys first."""
     from openmrs_patient_migration_script_spark.operators.etl import (
         assign_surrogate_keys,
     )
 
-    df = spark.createDataFrame([(kk,) for kk in keys], "k string")
+    df = spark.createDataFrame([(kk,) for kk in keys + [None] * n_null], "k string")
     out = assign_surrogate_keys(df, "k", id_col="sid", offset=offset, num_partitions=4)
-    got = {r["k"]: r["sid"] for r in out.collect()}
-    for rank, kk in enumerate(sorted(keys), start=1):
+    _assert_nulls_first_then_key_order(out.collect(), keys, n_null, offset)
+
+
+def _assert_nulls_first_then_key_order(rows, keys, n_null, offset):
+    null_ids = sorted(r["sid"] for r in rows if r["k"] is None)
+    assert null_ids == list(range(offset + 1, offset + n_null + 1))
+    got = {r["k"]: r["sid"] for r in rows if r["k"] is not None}
+    for rank, kk in enumerate(sorted(keys), start=n_null + 1):
         assert got[kk] == offset + rank
 
 

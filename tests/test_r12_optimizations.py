@@ -123,11 +123,12 @@ def test_normalized_binding_survives_optimizer(spark):
 
 def test_interpolate_segment_binding_survives_optimizer(spark):
     """Plan pin (r11 ADVICE): interpolate_linear's per-segment length
-    binding must keep inline `size(sequence(` occurrences at <= 2 in the
-    optimized plan (one once-per-segment binding + the two-part
-    max_buckets guard — the r11 fix took the TWO per-bucket inline
-    occurrences out of the inner lambda: the pre-fix plan carries 4, see
-    plans/r11/ts_interpolate_{before,after}.txt)."""
+    binding must keep inline `size(sequence(` occurrences at <= 3 in the
+    optimized plan: one once-per-segment binding plus the two-part
+    max_buckets guard (its filter and its error message). The r11 fix
+    took the TWO per-bucket inline occurrences out of the inner lambda:
+    the pre-fix plan carries 4, see
+    plans/r11/ts_interpolate_{before,after}.txt."""
     from openmrs_patient_migration_script_spark.operators.timeseries import (
         interpolate_linear,
     )

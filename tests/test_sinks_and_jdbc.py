@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from openmrs_patient_migration_script_spark.operators.etl import (
@@ -46,6 +48,23 @@ def test_multi_sink_writes_all_tables(spark, tmp_path):
         assert "uuid" in df.columns or name == "person"  # person carries person_uuid as uuid
         expected = 2 * n if name == "person_attribute" else n
         assert df.count() == expected, name
+
+
+def test_multi_sink_concurrent_writes_keep_job_group_and_raise(spark, tmp_path):
+    """The seven feed writes run on their own threads: the caller's job
+    group must still tag every one of their jobs, and a failed write
+    must surface as the caller's exception."""
+    sc = spark.sparkContext
+    sc.setJobGroup("multi-sink-test", "multi-sink")
+    try:
+        write_multi_sink(_reg(spark), str(tmp_path / "ok"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # one checkpoint job plus at least one job per feed
+    assert len(sc.statusTracker().getJobIdsForGroup("multi-sink-test")) >= 8
+    with pytest.raises(Exception, match="no_such_format"):
+        write_multi_sink(_reg(spark), str(tmp_path / "bad"), fmt="no_such_format")
 
 
 def test_fan_out_frames_share_client_key(spark):
@@ -130,6 +149,19 @@ def test_mysql_dialect_url_tuning():
 
     derby = jdbc_append_options("jdbc:derby:memory:db;create=true", "t")
     assert derby["url"] == "jdbc:derby:memory:db;create=true"
+
+
+def test_jdbc_append_options_derby_writes_through_one_connection():
+    """Embedded Derby serialises inserters, so its appends carry
+    ``numPartitions=1``; the MySQL option map stays exactly as it was."""
+    derby = jdbc_append_options("jdbc:derby:memory:db;create=true", "t")
+    assert derby["numPartitions"] == "1"
+    assert jdbc_append_options("jdbc:mysql://host/db", "person") == {
+        "url": "jdbc:mysql://host/db?rewriteBatchedStatements=true",
+        "dbtable": "person",
+        "batchsize": "5000",
+        "isolationLevel": "READ_COMMITTED",
+    }
 
 
 def test_engine_facade_sql_and_query_agree(spark):
@@ -284,3 +316,43 @@ def test_jdbc_idempotent_rerun_appends_only_new(spark, tmp_path):
         spark, url=url, table="PERSON", driver=DERBY_DRIVER
     ).count()
     assert total == 200
+
+
+def test_build_mapping_runbook_shape_roundtrips_through_derby(spark, sf_dir):
+    """E4 on the runbook's shape (registration build -> anti-join against
+    the migrated clients -> surrogate keys -> mapping): one row per new
+    client, ``patient_id = offset + row_number() OVER (ORDER BY
+    client_id)``, unique uuids, and the rows survive the JDBC append."""
+    from pyspark.sql import functions as F
+
+    from openmrs_patient_migration_script_spark.operators.etl import build_mapping
+    from openmrs_patient_migration_script_spark.sources.jdbc import write_jdbc_append
+
+    reg = registration_build(
+        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "nation")
+    )
+    migrated = reg.filter(F.col("client_id") % 3 == 0).select(
+        "client_id", (F.col("client_id") + 1000).alias("patient_id")
+    )
+    offset = max_id_offset(migrated, "patient_id")
+    fresh = idempotent_new_rows(reg, migrated, "client_id")
+    keyed = assign_surrogate_keys(fresh, "client_id", id_col="patient_id", offset=offset)
+    mapping = build_mapping(fresh, keyed)
+
+    rows = sorted(
+        (r["client_id"], r["patient_id"], r["uuid"]) for r in mapping.collect()
+    )
+    new_clients = sorted(r["client_id"] for r in fresh.select("client_id").collect())
+    assert [c for c, _, _ in rows] == new_clients
+    assert [p for _, p, _ in rows] == list(range(offset + 1, offset + len(rows) + 1))
+    assert len({u for _, _, u in rows}) == len(rows)
+
+    url = f"jdbc:derby:memory:mapping_{uuid.uuid4().hex};create=true"
+    write_jdbc_append(mapping, url=url, table="MAPPING", driver=DERBY_DRIVER)
+    back = (
+        spark.read.format("jdbc")
+        .options(url=url, dbtable="MAPPING", driver=DERBY_DRIVER)
+        .load()
+        .collect()
+    )
+    assert sorted((r["client_id"], r["patient_id"], r["uuid"]) for r in back) == rows
