@@ -237,6 +237,8 @@ def connected_components(
     """
     if algorithm not in ("minlabel", "star"):
         raise ValueError(f"algorithm must be 'minlabel' or 'star', got {algorithm!r}")
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.unionByName(
         sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -404,6 +406,8 @@ def connected_components_star(
         ).collect()[0]
         return out, (row["n"], row["h"])
 
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     e, sig = checkpoint_with_sig(
         raw.filter(F.col("u") != F.col("v")).distinct()
@@ -1852,6 +1856,11 @@ def edge_support(
     # builds) once per build — 2 extra map passes over the edge list per
     # support pass at cluster scale, for the price of one checkpoint
     # action the gate regime now shares with the shuffle regime.
+    # Fault-tolerance caveat: this checkpoint is unconditional, and a
+    # local checkpoint lives only in executor block storage with its
+    # lineage truncated. On a cluster, losing an executor that holds a
+    # block fails the job instead of recomputing it; the fix is a
+    # `reliable` checkpoint mode (ROADMAP Direction 2).
     oriented = oriented.localCheckpoint(eager=True)
     wedges = oriented.alias("e1").join(
         bc(oriented.alias("e2")), F.col("e1.v") == F.col("e2.u")

@@ -173,6 +173,30 @@ def test_connected_components_planted_clusters(spark):
     assert looped == got
 
 
+def test_connected_components_rejects_nonpositive_max_iter(spark):
+    """A round budget below 1 is rejected up front: an empty loop would
+    leave the non-convergence message without a round to report."""
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame([(1, 2)], ["key_a", "key_b"])
+    with pytest.raises(ValueError, match="max_iter"):
+        connected_components(edges, max_iter=0, local_threshold=0)
+
+
+def test_connected_components_star_rejects_nonpositive_max_iter(spark):
+    """A round budget below 1 is rejected before any job runs, not
+    reported as "did not converge in 0 rounds"."""
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        connected_components_star,
+    )
+
+    edges = spark.createDataFrame([(1, 2)], ["key_a", "key_b"])
+    with pytest.raises(ValueError, match="max_iter"):
+        connected_components_star(edges, max_iter=0)
+
+
 def test_contract_components_preserves_components(spark):
     """r9 partition-local contraction: under an ADVERSARIAL partitioning
     (every edge its own partition — no local merging possible) the star

@@ -852,7 +852,7 @@ _PYTHON_STAGE_OK_PREFIXES = (
 @pytest.mark.slow
 def test_whole_surface_plan_lint(spark):
     """No unplanned cartesian product and no row-at-a-time Python UDF
-    anywhere in the 220-query surface. A new query regressing into
+    anywhere in the declared query surface. A new query regressing into
     either shape fails HERE even before anyone benchmarks it."""
     bad = []
     for name in sorted(QUERIES):
